@@ -250,10 +250,10 @@ def _crawl_session(cores: int, app: str):
             "spark.speculation": "true",
             "spark.speculation.multiplier": "2",
             "spark.speculation.quantile": "0.75",
-            # checkpoint blocks are stored serialized by default
-            # (driver._CKPT_LEVEL, A/B-gated): lz4 them (bandwidth for
-            # CPU). Redundant with the session default; kept explicit
-            # because the crawl bench depends on it.
+            # checkpoint blocks are always stored serialized
+            # (driver._CKPT_LEVEL): lz4 them (bandwidth for CPU).
+            # Redundant with the session default; kept explicit because
+            # the crawl bench depends on it.
             "spark.rdd.compress": "true",
         },
     )
@@ -290,8 +290,8 @@ def _crawl_prepare(spark, cores: int):
     warm_pages = spark.createDataFrame(wg.corpus_pandas(warm_spec, warm_sites))
     crawl(
         spark, warm_pages,
-        CrawlParams(wave_seconds=100.0, use_bloom=True, n_shards=64,
-                    record_order=False, max_waves=4),
+        CrawlParams(wave_seconds=100.0, n_shards=64, record_order=False,
+                    max_waves=4),
         sites=warm_sites,
     )
     log(f"cores={cores} warmup done")
@@ -311,22 +311,18 @@ def phase_crawl(cores: int) -> dict:
     # (~1.5 GB of text per run), which degraded rep 2+ by 2-4x.
     import gc
 
-    defer = os.environ.get("BENCH_DEFER", "0") == "1"
     walls, metric_runs, step_runs, waves = [], [], [], 0
     for _ in range(CRAWL_REPS):
         t0 = time.time()
         res = crawl(
             spark, pages,
-            CrawlParams(wave_seconds=CRAWL_WAVE_SECONDS, use_bloom=True,
-                        n_shards=64, record_order=False, max_waves=12,
-                        n_salts=16, defer_detail_parse=defer),
+            CrawlParams(wave_seconds=CRAWL_WAVE_SECONDS, n_shards=64,
+                        record_order=False, max_waves=12, n_salts=16),
             sites=sites,
             pages_prepartitioned=True,
         )
         # materialize the items OUTPUT inside the timed window (round 5):
-        # the crawl's product is the items table, and the defer variant
-        # moves detail-text extraction into exactly this materialization
-        # — without it the two engine paths would not be comparable
+        # the crawl's product is the items table
         res.items.write.format("noop").mode("overwrite").save()
         walls.append(time.time() - t0)
         metric_runs.append(res.metrics)
@@ -385,9 +381,8 @@ def phase_crawl_store(cores: int) -> dict:
         t0 = time.time()
         res = crawl(
             spark, pages,
-            CrawlParams(wave_seconds=CRAWL_WAVE_SECONDS, use_bloom=True,
-                        n_shards=64, record_order=False, max_waves=12,
-                        n_salts=16),
+            CrawlParams(wave_seconds=CRAWL_WAVE_SECONDS, n_shards=64,
+                        record_order=False, max_waves=12, n_salts=16),
             sites=sites,
             store=LakeStore(root),
             pages_prepartitioned=True,

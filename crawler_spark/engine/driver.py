@@ -57,13 +57,14 @@ import os
 import time
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..canonical import canonicalize_url, canonicalize_url_col, host_of, host_of_py
 from ..config import SITES, SiteConfig, crawl_config_df
-from ..functions.parsing import ENRICH_STRUCT, enrich_page
+from ..functions.parsing import enrich_page
 from ..operators import dedup as dd
 from ..operators.politeness import admit_per_host, host_budget, pop_order
 from ..operators.robots import apply_robots
@@ -83,13 +84,6 @@ FRONTIER_SCHEMA = T.StructType(
         T.StructField("title", T.StringType(), True),       # detail rows
         T.StructField("publish_time", T.StringType(), True),
         T.StructField("origin_url", T.StringType(), True),
-    ]
-)
-
-SEEN_SCHEMA = T.StructType(
-    [
-        T.StructField("canon", T.StringType(), False),
-        T.StructField("url_hash", T.LongType(), False),
     ]
 )
 
@@ -145,24 +139,15 @@ class CrawlParams:
     wave_seconds: float = 8.0
     max_waves: int = 200
     obey_robots: bool = False
-    use_bloom: bool = True
     n_shards: int = 64
-    bloom_bits_per_shard: int = 1 << 17   # 16 KiB/shard; plenty at sandbox scale
     n_salts: int = 16                      # politeness skew split
     record_order: bool = True              # pop_seq bookkeeping (test scale)
-    acc_collapse_waves: int = 8            # output-accumulator collapse period
-    # Round-4 verdict item 4 (2→8 scaling loss pinned on the fused fetch
-    # job localCheckpointing ~1.5 GB of parsed detail text per wave
-    # through the single shared block-store write path): detail pages
-    # are TERMINAL here — their text feeds only the items output, never
-    # the next wave's frontier — so with defer_detail_parse=True the
-    # wave checkpoints only list-parse products + slim detail metadata
-    # (~200 B/row) and detail text extraction runs lazily when the
-    # items output is materialized (the sink write / accumulator
-    # collapse), flowing UDF → sink with NO block-store round trip.
-    # Byte-identical items either way (tests/test_crawl_e2e.py runs
-    # both paths against the same golden).
-    defer_detail_parse: bool = False
+
+
+BLOOM_BITS_PER_SHARD = 1 << 17  # 16 KiB/shard; plenty at sandbox scale
+ACC_COLLAPSE_WAVES = 8          # output-accumulator collapse period
+# the checkpoint names one snapshot per state table; a resume needs all three
+_SNAPSHOT_TABLES = ("frontier", "seen", "shards")
 
 
 @dataclass
@@ -220,19 +205,13 @@ class _StepClock:
 # fetch checkpoint writes ~GBs of parsed text per wave into the block
 # store; deserialized row blocks cost memory/store bandwidth that a
 # single box shares across all task slots, while serialization costs
-# CPU that scales with slots. Default ON — measured A/B (taskset-bound,
-# same corpus, 1 rep/level, round 4): serialized wins at BOTH levels
-# (local[2] 228.3s vs 237.4s; local[8] 68.7s vs 81.8s) and lifts 2→8
-# scaling efficiency 0.726 → 0.831. Opt out with
-# CRAWLER_SPARK_CKPT_SER=0.
-_CKPT_LEVEL = None
-if os.environ.get("CRAWLER_SPARK_CKPT_SER", "1") != "0":
-    from pyspark import StorageLevel as _SL
-
-    # PySpark's MEMORY_AND_DISK constant is the serialized level (the
-    # JVM-side deserialized variant is MEMORY_AND_DISK_DESER, which is
-    # also localCheckpoint's default)
-    _CKPT_LEVEL = _SL.MEMORY_AND_DISK
+# CPU that scales with slots. Measured A/B (taskset-bound, same corpus,
+# 1 rep/level, round 4): serialized wins at BOTH levels (local[2] 228.3s
+# vs 237.4s; local[8] 68.7s vs 81.8s) and lifts 2→8 scaling efficiency
+# 0.726 → 0.831. PySpark's MEMORY_AND_DISK constant is the serialized
+# level (the JVM-side deserialized variant is MEMORY_AND_DISK_DESER,
+# which is also localCheckpoint's default).
+_CKPT_LEVEL = StorageLevel.MEMORY_AND_DISK
 
 
 def _checkpointed(df: DataFrame) -> DataFrame:
@@ -257,42 +236,33 @@ def _checkpointed(df: DataFrame) -> DataFrame:
     return DataFrame(njdf, spark)
 
 
-def _checkpoint_many(
-    dfs: list[DataFrame | None],
-    posts: list | None = None,
-    ckpt: list[bool] | None = None,
-) -> tuple[list[DataFrame | None], list]:
+def _checkpoint_many(dfs: list[DataFrame]) -> list[DataFrame]:
     """Eager-checkpoint several DataFrames CONCURRENTLY (one thread per
     action — Spark schedules concurrent jobs fine). Serial scheduling
     latency (~0.3-1s per action) was a fixed ~10s/wave tax that
-    throttled scaling efficiency.
-
-    ``posts[i]`` (optional callable) runs on the checkpointed DataFrame
-    in the SAME thread — metric counts piggyback on the concurrent
-    phase instead of being separate serial jobs afterwards.
-    ``ckpt[i]=False`` skips the checkpoint and only runs the post (for
-    DataFrames that are cheap projections of an already-checkpointed
-    parent — re-materializing their payload would double the write).
-    Returns (checkpointed dfs, post results)."""
+    throttled scaling efficiency."""
     from concurrent.futures import ThreadPoolExecutor
 
-    posts = posts or [None] * len(dfs)
-    ckpt = ckpt or [True] * len(dfs)
-    live = [(i, df) for i, df in enumerate(dfs) if df is not None]
-    out: list[DataFrame | None] = list(dfs)
-    extras: list = [None] * len(dfs)
+    with ThreadPoolExecutor(max_workers=len(dfs)) as ex:
+        return list(ex.map(_checkpointed, dfs))
 
-    def work(i: int, df: DataFrame):
-        ck = _checkpointed(df) if ckpt[i] else df
-        p = posts[i]
-        return ck, (p(ck) if p is not None else None)
 
-    if live:
-        with ThreadPoolExecutor(max_workers=len(live)) as ex:
-            futs = {ex.submit(work, i, df): i for i, df in live}
-            for fut, i in futs.items():
-                out[i], extras[i] = fut.result()
-    return out, extras
+def _with_blobs(seen: DataFrame, shards: DataFrame):
+    """Densify + materialize the bloom-probe blobs of ``shards``; returns
+    the (seen, shards, blobs) state the dedup gate reads. Runs on the
+    background state-commit thread."""
+    b = dd.densify(shards, BLOOM_BITS_PER_SHARD).persist()
+    b.count()
+    return seen, shards, b
+
+
+def _commit_state(seen: DataFrame, shards: DataFrame):
+    """Checkpoint seen/shards concurrently, then build the next wave's
+    blobs — all on the background thread, off the wave-loop critical
+    path. Inputs derive only from CHECKPOINTED DataFrames (new_frontier,
+    prior seen/shards), so there is no cache race with the main thread's
+    jobs."""
+    return _with_blobs(*_checkpoint_many([seen, shards]))
 
 
 class _Acc:
@@ -340,6 +310,22 @@ def _scratch(df: DataFrame, pool: list) -> DataFrame:
     return df
 
 
+def _save_state(
+    store: LakeStore, wave: int, pop_base: int, state: tuple[DataFrame, ...]
+) -> None:
+    """Stage every snapshot table (``state`` in ``_SNAPSHOT_TABLES``
+    order) first; the checkpoint's single atomic rename then commits
+    them ALL at once (no window where frontier is at w(k) but seen at
+    w(k-1) — lakestore docstring, ADVICE round 1)."""
+    cid = f"w{wave}"
+    for tb, df in zip(_SNAPSHOT_TABLES, state):
+        store.stage_snapshot(df, tb, cid)
+    store.save_checkpoint({
+        "wave": wave, "pop_base": pop_base,
+        "snapshots": dict.fromkeys(_SNAPSHOT_TABLES, cid),
+    })
+
+
 def crawl(
     spark: SparkSession,
     pages: DataFrame,
@@ -376,61 +362,50 @@ def crawl(
     if resume and store is not None and (ckpt := store.load_checkpoint()):
         wave = int(ckpt["wave"])
         pop_base = int(ckpt.get("pop_base", 0))
-        if "snapshots" not in ckpt:
-            # a checkpoint written before the atomic multi-table snapshot
-            # protocol has per-table manifests only; resuming through it
-            # would silently read EMPTY frontier/seen and "finish" the
-            # crawl with zero items — fail loudly instead.
+        # snapshot tables resolve through the checkpoint (the atomic
+        # multi-table commit point) — never through per-table manifests.
+        # A checkpoint written before that protocol (no 'snapshots'
+        # entry) or without the Bloom shards would resume from EMPTY
+        # state: an empty frontier/seen "finishes" the crawl with zero
+        # items, empty shards answer "not seen" for every candidate so
+        # the exact anti-join is skipped and seen URLs are crawled again
+        # — fail loudly instead.
+        snaps: dict = ckpt.get("snapshots", {})
+        missing = [tb for tb in _SNAPSHOT_TABLES if tb not in snaps]
+        if missing:
             raise ValueError(
-                f"checkpoint at {store.root!r} predates the snapshot "
-                "protocol (no 'snapshots' entry) — cannot resume safely; "
-                "restart the crawl with a fresh store"
+                f"checkpoint at {store.root!r} names no snapshots for "
+                f"{missing} — cannot resume safely; restart the crawl "
+                "with a fresh store"
             )
         store.drop_uncommitted("items")
         store.drop_uncommitted("errors")
         store.drop_uncommitted("pops")
-        # snapshot tables resolve through the checkpoint (the atomic
-        # multi-table commit point) — never through per-table manifests;
-        # staged-but-unnamed snapshot dirs from a torn crash are GC'd.
-        snaps: dict = ckpt["snapshots"]
+        # staged-but-unnamed snapshot dirs from a torn crash are GC'd
         for tb, cid in snaps.items():
             store.gc_snapshots(tb, cid)
-        frontier = store.read_snapshot(spark, "frontier", snaps.get("frontier"), FRONTIER_SCHEMA)
-        seen = store.read_snapshot(spark, "seen", snaps.get("seen"), SEEN_SCHEMA)
-        shards = (
-            store.read_snapshot(spark, "shards", snaps.get("shards"), dd.SHARD_SCHEMA)
-            if params.use_bloom else None
+        frontier, seen, shards = (
+            store.read_snapshot(spark, tb, snaps[tb]) for tb in _SNAPSHOT_TABLES
         )
     else:
         frontier = seed_frontier(spark, sites)
         seen = frontier.select("canon", "url_hash")
-        shards = (
-            dd.update_shards(
-                dd.empty_shards(spark, params.n_shards, params.bloom_bits_per_shard),
-                seen.select("url_hash"),
-                params.n_shards,
-                params.bloom_bits_per_shard,
-            )
-            if params.use_bloom
-            else None
+        shards = dd.update_shards(
+            dd.empty_shards(spark, params.n_shards, BLOOM_BITS_PER_SHARD),
+            seen.select("url_hash"),
+            params.n_shards,
+            BLOOM_BITS_PER_SHARD,
         )
         if store is not None:
-            snaps = {"frontier": "w0", "seen": "w0"}
-            store.stage_snapshot(frontier, "frontier", "w0")
-            store.stage_snapshot(seen, "seen", "w0")
-            if shards is not None:
-                snaps["shards"] = "w0"
-                store.stage_snapshot(shards, "shards", "w0")
-            store.save_checkpoint({"wave": 0, "pop_base": 0, "snapshots": snaps})
+            _save_state(store, 0, 0, (frontier, seen, shards))
 
     frontier = _checkpointed(frontier)
     seen = _checkpointed(seen)
-    if shards is not None:
-        shards = _checkpointed(shards)
+    shards = _checkpointed(shards)
 
-    items_acc = _Acc(spark, ITEMS_SCHEMA, params.acc_collapse_waves)
-    errors_acc = _Acc(spark, ERRORS_SCHEMA, params.acc_collapse_waves)
-    pops_acc = _Acc(spark, POPS_SCHEMA, params.acc_collapse_waves)
+    items_acc = _Acc(spark, ITEMS_SCHEMA, ACC_COLLAPSE_WAVES)
+    errors_acc = _Acc(spark, ERRORS_SCHEMA, ACC_COLLAPSE_WAVES)
+    pops_acc = _Acc(spark, POPS_SCHEMA, ACC_COLLAPSE_WAVES)
     last_pops: DataFrame | None = None
 
     cfg_cols = F.broadcast(
@@ -458,19 +433,6 @@ def crawl(
     state_fut: Future | None = None
     clk = _StepClock()
 
-    def _commit_state(seen2: DataFrame, shards2: DataFrame | None):
-        """Background: checkpoint seen/shards concurrently, then densify
-        + materialize the next wave's bloom-probe blobs — all off the
-        wave-loop critical path. Inputs derive only from CHECKPOINTED
-        DataFrames (new_frontier, prior seen/shards), so there is no
-        cache race with the main thread's jobs."""
-        (s2, sh2), _ = _checkpoint_many([seen2, shards2])
-        b = None
-        if sh2 is not None:
-            b = dd.densify(sh2, params.bloom_bits_per_shard).persist()
-            b.count()
-        return s2, sh2, b
-
     while wave < params.max_waves:
         if pending == 0:
             break
@@ -482,13 +444,8 @@ def crawl(
         # pipeline is in flight (wave 1, wave after a zero-new wave, a
         # durable-store wave), densify + warm them in the background
         # DURING this wave's admit+fetch instead of serially at the gate
-        blobs: DataFrame | None = None
-        blobs_warm: Future | None = None
-        if state_fut is None and shards is not None:
-            blobs = _scratch(
-                dd.densify(shards, params.bloom_bits_per_shard), scratch_pool
-            )
-            blobs_warm = state_ex.submit(lambda b=blobs: b.count())
+        if state_fut is None:
+            state_fut = state_ex.submit(_with_blobs, seen, shards)
         clk.tick(f"wave_setup {wave} begin (pending={pending})")
 
         f = frontier.join(cfg_cols, "source", "left")
@@ -543,43 +500,20 @@ def crawl(
         base = admitted.join(pages_slim, "url", "left").withColumn(
             "fetch_ok", F.col("html").isNotNull()
         )
-        meta_cols = [
-            *[c.name for c in FRONTIER_SCHEMA],
-            "parse_kind", "contents_base_url", "origin_url_template",
-            "max_page", "province", "city", "county", "site_name",
-            "fetch_ok",
-        ]
-        if params.defer_detail_parse:
-            # lists-only enrich: detail pages are terminal (their text
-            # feeds only the items output), so the wave-critical
-            # checkpoint carries list anns + slim detail metadata — the
-            # ~GBs of detail text never enter the block store. The kind
-            # filters push below the join, so the two branches together
-            # probe each admitted row once.
-            lists = (
-                base.filter(F.col("kind") == "list")
-                .withColumn(
-                    "_e",
-                    enrich_page(F.col("html"), F.col("kind"), F.col("parse_kind")),
-                )
-                .select(*meta_cols, F.col("_e.anns").alias("anns"))
+        enriched = (
+            base
+            .withColumn(
+                "_e", enrich_page(F.col("html"), F.col("kind"), F.col("parse_kind"))
             )
-            dets = base.filter(F.col("kind") != "list").select(
-                *meta_cols, F.lit(None).cast(ENRICH_STRUCT["anns"].dataType).alias("anns")
+            .select(
+                *[c.name for c in FRONTIER_SCHEMA],
+                "parse_kind", "contents_base_url", "origin_url_template",
+                "max_page", "province", "city", "county", "site_name",
+                "fetch_ok",
+                F.col("_e.anns").alias("anns"),
+                F.col("_e.text").alias("text"),
             )
-            enriched = lists.unionByName(dets)
-        else:
-            enriched = (
-                base
-                .withColumn(
-                    "_e", enrich_page(F.col("html"), F.col("kind"), F.col("parse_kind"))
-                )
-                .select(
-                    *meta_cols,
-                    F.col("_e.anns").alias("anns"),
-                    F.col("_e.text").alias("text"),
-                )
-            )
+        )
         # piggyback the wave's row counts on the checkpoint action via
         # observe(): CollectMetrics accumulates per-task during the
         # materialization, so n_admitted / n_miss / n_items cost ZERO
@@ -604,16 +538,12 @@ def crawl(
         n_miss = ovals["n_miss"] or 0
         n_items = ovals["n_items"] or 0
         clk.tick("fetch_ckpt")
-        # join the state pipeline: wave k-1's seen/shards checkpoints and
-        # this wave's densified blobs were computed while this wave
-        # admitted and fetched; the first reader is the dedup gate below
-        if state_fut is not None:
-            seen, shards, blobs = state_fut.result()
-            state_fut = None
-            if blobs is not None:
-                scratch_pool.append(blobs)
-        elif blobs_warm is not None:
-            blobs_warm.result()  # surface background densify errors
+        # join the state pipeline: wave k-1's seen/shards checkpoints (if
+        # any) and this wave's densified blobs were computed while this
+        # wave admitted and fetched; the first reader is the dedup gate
+        seen, shards, blobs = state_fut.result()
+        state_fut = None
+        scratch_pool.append(blobs)
         clk.tick("state_join")
 
         misses = fetched.filter(~F.col("fetch_ok"))
@@ -687,9 +617,9 @@ def crawl(
         # ---- dedup gate (O10/E1): NEW = not seen at wave start -----------
         # (blobs were densified in the background during admit+fetch)
         fresh = dd.filter_new(
-            cand, seen, blobs, params.n_shards, params.bloom_bits_per_shard,
+            cand, seen, blobs, params.n_shards, BLOOM_BITS_PER_SHARD,
             prebuilt_blobs=True,
-        ) if blobs is not None else dd.filter_new(cand, seen, None)
+        )
         # fresh keeps parent_url per citing page
         fresh = _scratch(fresh, scratch_pool)
         clk.tick("dedup_fresh_built")
@@ -759,10 +689,9 @@ def crawl(
                 F.lit(None).cast("string").alias("origin_url"),
             )
         )
-        new_pages = (
-            dd.filter_new(next_pages, seen, blobs, params.n_shards,
-                          params.bloom_bits_per_shard, prebuilt_blobs=True)
-            if blobs is not None else dd.filter_new(next_pages, seen, None)
+        new_pages = dd.filter_new(
+            next_pages, seen, blobs, params.n_shards, BLOOM_BITS_PER_SHARD,
+            prebuilt_blobs=True,
         )
         clk.tick("next_pages_built")
 
@@ -772,35 +701,11 @@ def crawl(
         # (text was extracted in the single enrich pass; provenance cols
         # were joined before the checkpoint)
         details = fetched.filter((F.col("kind") == "detail") & F.col("fetch_ok"))
-        if params.defer_detail_parse:
-            # text extraction re-joins the slim detail rows against the
-            # pre-bucketed corpus and runs the SAME detail-extract UDF
-            # lazily — it executes when the items output materializes
-            # (sink write / accumulator collapse), off the wave-critical
-            # path, UDF → sink with no intermediate text checkpoint
-            wave_items = (
-                details.select(
-                    "url", "source", "title", "publish_time", "origin_url",
-                    "province", "city", "county", "site_name", "parse_kind",
-                )
-                .join(pages_slim, "url", "left")
-                .withColumn(
-                    "_e",
-                    enrich_page(F.col("html"), F.lit("detail"), F.col("parse_kind")),
-                )
-                .select(
-                    "url", "source", "title", "publish_time", "origin_url",
-                    "province", "city", "county", "site_name",
-                    F.col("_e.text").alias("text"),
-                    F.lit(wave).alias("wave"),
-                )
-            )
-        else:
-            wave_items = details.select(
-                "url", "source", "title", "publish_time", "origin_url",
-                "province", "city", "county", "site_name", "text",
-                F.lit(wave).alias("wave"),
-            )
+        wave_items = details.select(
+            "url", "source", "title", "publish_time", "origin_url",
+            "province", "city", "county", "site_name", "text",
+            F.lit(wave).alias("wave"),
+        )
         # ---- outputs + state transition ----------------------------------
         # new_frontier is the only job here: the wave's counts were
         # observed during the fetch checkpoint, and werr / wave_items
@@ -838,12 +743,9 @@ def crawl(
             seen2 = seen.unionByName(
                 new_frontier.select("canon", "url_hash")
             ).coalesce(n_part)
-            shards2 = (
-                dd.update_shards(
-                    shards, new_frontier.select("url_hash"),
-                    params.n_shards, params.bloom_bits_per_shard,
-                )
-                if shards is not None else None
+            shards2 = dd.update_shards(
+                shards, new_frontier.select("url_hash"),
+                params.n_shards, BLOOM_BITS_PER_SHARD,
             )
             state_fut = state_ex.submit(_commit_state, seen2, shards2)
             frontier2 = deferred.unionByName(new_frontier).coalesce(n_part)
@@ -863,9 +765,8 @@ def crawl(
         )
         for df in scratch_pool:
             df.unpersist()
-        if os.environ.get("CRAWLER_SPARK_VERBOSE"):
-            import time as _time
-            print(f"[crawl] {_time.strftime('%H:%M:%S')} {metrics[-1]}", flush=True)
+        if _VERBOSE:
+            print(f"[crawl] {time.strftime('%H:%M:%S')} {metrics[-1]}", flush=True)
 
         # ---- durable commit (idempotent; see lakestore docstring) --------
         if store is not None:
@@ -875,9 +776,7 @@ def crawl(
             if state_fut is not None:
                 seen, shards, _b = state_fut.result()
                 state_fut = None
-                if _b is not None:
-                    # next wave re-densifies from the re-read snapshot
-                    _b.unpersist()
+                _b.unpersist()  # next wave re-densifies from the re-read snapshot
             cid = f"w{wave}"
             store.append(wave_items, "items", cid)
             store.append(werr, "errors", cid)
@@ -887,26 +786,13 @@ def crawl(
                 spark.createDataFrame([tuple(metrics[-1].values())], METRICS_SCHEMA),
                 "metrics", cid,
             )
-            # stage every snapshot table first; the checkpoint's single
-            # atomic rename then commits them ALL at once (no window
-            # where frontier is at w(k) but seen at w(k-1) — lakestore
-            # docstring, ADVICE round 1)
-            snaps = {"frontier": cid, "seen": cid}
-            store.stage_snapshot(frontier, "frontier", cid)
-            store.stage_snapshot(seen, "seen", cid)
-            if shards is not None:
-                snaps["shards"] = cid
-                store.stage_snapshot(shards, "shards", cid)
-            store.save_checkpoint(
-                {"wave": wave, "pop_base": pop_base, "snapshots": snaps}
-            )
-            for tb, c in snaps.items():
-                store.gc_snapshots(tb, c)
+            _save_state(store, wave, pop_base, (frontier, seen, shards))
+            for tb in _SNAPSHOT_TABLES:
+                store.gc_snapshots(tb, cid)
             # re-read state so each wave starts from durable parquet
-            frontier = store.read_snapshot(spark, "frontier", cid)
-            seen = store.read_snapshot(spark, "seen", cid)
-            if shards is not None:
-                shards = store.read_snapshot(spark, "shards", cid)
+            frontier, seen, shards = (
+                store.read_snapshot(spark, tb, cid) for tb in _SNAPSHOT_TABLES
+            )
             # the durability tax is MEASURED per wave (everything from the
             # state-pipeline join through appends, staging, the atomic
             # checkpoint, GC and the durable re-read) — bench reads this
@@ -918,8 +804,7 @@ def crawl(
     # wave's seen/shards commit in flight)
     if state_fut is not None:
         seen, shards, _b = state_fut.result()
-        if _b is not None:
-            _b.unpersist()
+        _b.unpersist()
     state_ex.shutdown(wait=True)
     if not pages_prepartitioned:
         pages_slim.unpersist()

@@ -965,7 +965,7 @@ def crawl_wave_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = spark.createDataFrame(wg.corpus_pandas(spec))
     res = crawl(
         spark, pages,
-        CrawlParams(wave_seconds=GOLDEN_WAVE_SECONDS, use_bloom=True, n_shards=8,
+        CrawlParams(wave_seconds=GOLDEN_WAVE_SECONDS, n_shards=8,
                     record_order=False, max_waves=60),
     )
     return res.items.orderBy("url")
@@ -1014,8 +1014,7 @@ def crawl_resume_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # not here
     atexit.register(shutil.rmtree, root, ignore_errors=True)
     store = LakeStore(root)
-    base = dict(wave_seconds=GOLDEN_WAVE_SECONDS, use_bloom=True, n_shards=8,
-                record_order=False)
+    base = dict(wave_seconds=GOLDEN_WAVE_SECONDS, n_shards=8, record_order=False)
     crawl(spark, pages, CrawlParams(max_waves=2, **base), store=store)
     assert store.load_checkpoint()["wave"] == 2
     crawl(spark, pages, CrawlParams(max_waves=60, **base), store=store,

@@ -50,9 +50,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # checkpoint/persist blocks are stored serialized by default
-        # (engine/driver.py _CKPT_LEVEL); lz4 them — trades per-slot CPU
-        # for the block-store bandwidth all slots share
+        # checkpoint blocks are always stored serialized (engine/driver.py
+        # _CKPT_LEVEL); lz4 them — trades per-slot CPU for the
+        # block-store bandwidth all slots share
         .config("spark.rdd.compress", "true")
     )
     for k, v in (extra_conf or {}).items():

@@ -32,26 +32,8 @@ def golden(corpus):
 @pytest.fixture(scope="module")
 def engine_result(spark, corpus):
     spec, pages = corpus
-    params = CrawlParams(wave_seconds=WAVE_SECONDS, use_bloom=True, n_shards=8)
+    params = CrawlParams(wave_seconds=WAVE_SECONDS, n_shards=8)
     return crawl(spark, pages, params)
-
-
-def test_defer_detail_parse_byte_identical(spark, corpus, engine_result):
-    """defer_detail_parse=True (slim wave checkpoint, lazy detail text
-    extraction at items materialization — round-4 verdict item 4) must
-    produce the EXACT item set of the default path, wave numbers and
-    all."""
-    spec, pages = corpus
-    params = CrawlParams(wave_seconds=WAVE_SECONDS, use_bloom=True, n_shards=8,
-                         defer_detail_parse=True)
-    got = (
-        crawl(spark, pages, params).items
-        .toPandas().sort_values("url").reset_index(drop=True)
-    )
-    want = (
-        engine_result.items.toPandas().sort_values("url").reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got, want[got.columns])
 
 
 def test_items_match_golden(engine_result, golden):

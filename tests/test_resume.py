@@ -28,7 +28,7 @@ def _items_pdf(store, spark):
 
 def test_resume_equals_uninterrupted(spark, small_pages, tmp_path_factory):
     spec, pages = small_pages
-    params = CrawlParams(wave_seconds=4.0, use_bloom=True, n_shards=4, max_waves=100)
+    params = CrawlParams(wave_seconds=4.0, n_shards=4, max_waves=100)
 
     # uninterrupted run
     s_full = LakeStore(str(tmp_path_factory.mktemp("full")))
@@ -60,7 +60,7 @@ def test_uncommitted_wave_is_replayed(spark, small_pages, tmp_path_factory):
     """A wave directory written but not committed (crash between data
     write and manifest swap) must be invisible and safely overwritten."""
     spec, pages = small_pages
-    params = CrawlParams(wave_seconds=4.0, use_bloom=False, max_waves=2)
+    params = CrawlParams(wave_seconds=4.0, max_waves=2)
     store = LakeStore(str(tmp_path_factory.mktemp("crash")))
     crawl(spark, pages, params, store=store)
 
@@ -73,7 +73,7 @@ def test_uncommitted_wave_is_replayed(spark, small_pages, tmp_path_factory):
     # resume: must drop the uncommitted dir, then continue cleanly
     r = crawl(
         spark, pages,
-        CrawlParams(wave_seconds=4.0, use_bloom=False, max_waves=100),
+        CrawlParams(wave_seconds=4.0, max_waves=100),
         store=store, resume=True,
     )
     after = _items_pdf(store, spark)
@@ -90,7 +90,7 @@ def test_torn_multi_table_snapshot_swap(spark, small_pages, tmp_path_factory):
     import os
 
     spec, pages = small_pages
-    params = CrawlParams(wave_seconds=4.0, use_bloom=True, n_shards=4, max_waves=100)
+    params = CrawlParams(wave_seconds=4.0, n_shards=4, max_waves=100)
 
     s_full = LakeStore(str(tmp_path_factory.mktemp("full2")))
     crawl(spark, pages, params, store=s_full)
@@ -123,13 +123,25 @@ def test_torn_multi_table_snapshot_swap(spark, small_pages, tmp_path_factory):
     ) == [final]
 
 
-def test_resume_rejects_legacy_checkpoint(spark, tmp_path):
-    """A checkpoint written before the atomic multi-table snapshot
-    protocol (no 'snapshots' entry) must fail LOUDLY on resume —
-    silently reading an empty frontier/seen would end the crawl
-    immediately with zero items and no error."""
+@pytest.mark.parametrize(
+    "payload",
+    [
+        pytest.param({"wave": 3, "pop_base": 0}, id="legacy"),
+        pytest.param(
+            {"wave": 1, "pop_base": 0, "snapshots": {"frontier": "w0", "seen": "w0"}},
+            id="no_shards",
+        ),
+    ],
+)
+def test_resume_rejects_legacy_checkpoint(spark, tmp_path, payload):
+    """A checkpoint that does not name every state snapshot must fail
+    LOUDLY on resume. One written before the atomic multi-table snapshot
+    protocol (no 'snapshots' entry) would silently read an empty
+    frontier/seen and end the crawl with zero items and no error; one
+    without Bloom shards would read empty shards, answer "not seen" for
+    every candidate and crawl already-seen URLs again."""
     store = LakeStore(str(tmp_path / "legacy"))
-    store.save_checkpoint({"wave": 3, "pop_base": 0})  # legacy shape
+    store.save_checkpoint(payload)
     pages = spark.createDataFrame(
         [("http://h1-test.local/x", "<html></html>")], "url string, html string"
     )

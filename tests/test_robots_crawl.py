@@ -34,8 +34,7 @@ def robot_run(spark):
     )
     res = crawl(
         spark, pages,
-        CrawlParams(wave_seconds=8.0, obey_robots=True, use_bloom=True,
-                    n_shards=8, max_waves=100),
+        CrawlParams(wave_seconds=8.0, obey_robots=True, n_shards=8, max_waves=100),
         robots_rules=rules_df,
     )
     golden = orc.oracle_crawl(
