@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 # REGISTRATION order and historically capped at the first 50 entries
 # (CORRECTNESS_r04 == registry[:50]); import order alone left 44 queries
 # ungraded. This list puts (a) the 44 r04-ungraded queries first
-# (cheapest first — measured sf0.01 walls, jobs/profile_grading.py),
+# (cheapest first — measured sf0.01 walls, jobs/sweep_oracle.py),
 # then (b) anything new this round (names absent from this list slot in
 # right after), then (c) the 50 r04-green entries cheap-first with the
 # 56s crawl_wave_loop flagship last — it already has two green graded

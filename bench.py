@@ -1,38 +1,36 @@
 #!/usr/bin/env python
-"""Benchmark harness — prints ONE JSON line to stdout (progress → stderr).
+"""Benchmark harness: one fixed protocol, progress to stderr.
 
 Measurements:
 
-1. **Crawl throughput scaling** — the full wave loop (fetch-join, Arrow
+1. **Crawl throughput scaling**: the full wave loop (fetch-join, Arrow
    parse, bloom dedup, politeness, pagination) over a generated
-   ~300k-URL virtual web with one host holding 80% of the URLs, run at
-   TWO scaling pairs — local[1] vs local[4] AND local[2] vs local[8] —
-   on the SAME input: the sandbox stand-in for the north_rule's N vs 4N
-   executor criterion, reported in BOTH the work-dominated and the
-   barrier-visible regime. Each level runs in its own subprocess (own
-   JVM) so the master setting is honest. The per-step wall breakdown
-   (CrawlResult.step_walls) is recorded so the fixed-orchestration
-   barrier share is MEASURED, not guessed.
-2. **Data-plane throughput** at the same pairs (single-pass enrich).
-3. **Durable-state tax** — one crawl run with a LakeStore attached at
-   the same corpus/level; the per-wave commit overhead is read from the
-   run's own step_walls["store_commit"] accumulator (measured in-run,
-   robust to ambient-load drift between separate runs).
-4. **Politeness salt skew** — the admission window on the 80%-one-host
+   ~330k-page virtual web with one host holding 80% of the URLs, at
+   local[1] vs local[4] on the SAME input: the sandbox stand-in for the
+   N vs 4N executor scaling criterion. Each level runs in its own
+   subprocess (own JVM) so the master setting is honest. The per-step
+   wall breakdown (CrawlResult.step_walls) is recorded so the
+   fixed-orchestration barrier share is MEASURED, not guessed. All four
+   crawl runs must produce the same per-wave items and admitted counts
+   (partition independence); a mismatch exits non-zero.
+2. **Data-plane throughput** at the same pair (single-pass enrich).
+3. **Politeness salt skew**: the admission window on the 80%-one-host
    frontier with n_salts=1 vs 16.
-5. **Headline queries** at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-   local[$SPARK_GRAFT_CPUS]; min-of-3 timed runs per query (single-shot
+4. **Headline queries** at $SPARK_GRAFT_SF_DIR (default sf0.1) on
+   local[$SPARK_GRAFT_CPUS]; min-of-2 timed runs per query (single-shot
    walls on this shared box carry ±2x ambient noise), each forced
    through a noop sink so column pruning can't skip the measured work.
 
-Efficiency = (throughput_high / throughput_low) / (N_high / N_low).
-Results also land in BENCH.md.
+The durable-state tax is not measured here: ``perfbench/run.py
+--workload durable_resume --trace 1`` reports it per wave as
+``driver.step.store_commit_s``.
 
-Budget discipline (round 5): BENCH_DEADLINE_S (default 2700s) is a
-global soft deadline — the adaptive retry and the per-query table only
-spend remaining budget, and the query phase truncates (reporting the
-skipped tail) rather than overrunning. A partial artifact with the
-crawl-scaling criterion beats round 4's rc=124/parsed=None.
+Efficiency = (throughput_high / throughput_low) / (N_high / N_low).
+
+The last stdout line is a compact JSON headline (under 1,500 chars, so
+a log tail holds all of it); the full result goes to BENCH_detail.json
+and the tables to BENCH.md. The query phase truncates at a soft
+deadline (reporting the skipped tail) rather than overrunning.
 """
 
 from __future__ import annotations
@@ -45,73 +43,27 @@ import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+HERE = os.path.dirname(os.path.abspath(__file__))
+DETAIL_FILE = "BENCH_detail.json"
 
-# Round-4 lesson: the FULL protocol (two scaling pairs x 2 interleaved
-# rounds of a 494k-page crawl incl. ~635s/rep at local[1], plus 76
-# queries x min-of-3, plus store-tax and salt-skew phases) exceeded the
-# driver's wall budget — BENCH_r04.json recorded rc=124/parsed=None and
-# round 4 had NO graded perf number. The DEFAULT profile is now
-# budgeted (~20 min: one pair, one round, 16k-section corpus, curated
-# query subset, min-of-2); BENCH_FULL=1 restores the full protocol.
-FULL = os.environ.get("BENCH_FULL", "0") == "1"
-
-# scaling pairs: N vs 4N task slots (bound to 2N / 8N cpus — with Arrow
+# scaling pair: N vs 4N task slots (bound to 2N / 8N cpus: with Arrow
 # pandas UDFs each slot drives a JVM thread AND a Python worker, so a
-# slot needs ~2 cpus; local[32] would need 64 cpus on this 32-cpu box
-# and measures oversubscription, not scaling). 1→4 is the
-# work-dominated regime a 10^10-URL wave lives in (hours of data-plane
-# work per wave dwarf any constant barrier) and is the default; the
-# barrier-visible 2→8 pair joins under BENCH_FULL=1 (round-3 advice).
-PAIRS = [
-    tuple(int(x) for x in p.split("-"))
-    for p in os.environ.get(
-        "BENCH_PAIRS", "1-4,2-8" if FULL else "1-4"
-    ).split(",")
-]
+# slot needs ~2 cpus). 1->4 is the work-dominated regime a 10^10-URL
+# wave lives in (hours of data-plane work per wave dwarf any constant
+# barrier).
+LO, HI = 1, 4
+# interleaved rounds per phase (lo, hi, lo, hi): the two runs of a level
+# land in two separated time windows, so a multi-minute contention burst
+# cannot hit both of one level's runs and neither of the other's. Same
+# run count per level: asymmetric counts give one level more shots at an
+# uncontended window and bias the ratio.
+ROUNDS = 2
 
-_FULL_QUERIES = [
-    "tpch_q1_pricing_summary", "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume", "top_customers_per_nation",
-    "dedup_exact_md5", "doc_fingerprint", "doc_quality_score",
-    "dedup_minhash_signatures", "dedup_minhash_lsh_pairs",
-    "dedup_ngram_jaccard", "dedup_simhash", "dedup_embedding_cosine",
-    "dedup_lsh_clusters",
-    "ann_brute_force_topk", "ann_ivf_label_cells", "ann_gemm_batch_topk",
-    "robots_gate", "events_windowed_agg", "events_sessionize",
-    "multimodal_features", "multimodal_decode",
-    "doc_stratified_sample", "doc_top_bigrams", "doc_length_histogram",
-    "doc_token_repetition", "doc_pii_scrub", "doc_decontaminate",
-    "url_canonicalize", "frontier_dedup_antijoin",
-    "politeness_admission",
-    "events_asof_join", "events_interval_join", "doc_dup_kgram_windows",
-    "events_sliding_window", "orders_status_cube", "doc_mix_rebalance",
-    "events_value_percentiles", "events_user_set_ops",
-    "docs_link_pagerank", "events_distinct_kmv", "events_funnel_conversion",
-    "doc_chunk_dedup", "doc_sequence_packing",
-    "doc_bigram_fluency", "doc_tfidf_top_terms", "doc_fluency_buckets",
-    "doc_domain_reputation", "dedup_lsh_exact_verify",
-    "dedup_simhash_pairs", "doc_vocab_oov_rate",
-    "dedup_keep_canonical", "doc_gopher_quality_filter",
-    "crawl_snapshot_delta", "embedding_scalar_quantize",
-    "doc_lang_token_budget",
-    "dedup_incremental_lsh_gate", "doc_cms_heavy_hitters",
-    "doc_weighted_sample", "ann_quality_gated_topk",
-    "warc_record_roundtrip", "docs_anchor_text_agg", "doc_unicode_clean",
-    "events_retention_cohorts", "doc_train_split", "embedding_dim_stats",
-    "doc_line_dedup", "doc_dsir_importance", "doc_token_entropy",
-    "doc_zipf_slope", "url_trap_templates", "host_boilerplate_prefix",
-    "events_value_mad_outliers",
-    "doc_bpe_pair_stats", "doc_sampling_temperature", "docs_host_degree_stats",
-    "docs_graph_triangles", "events_markov_transitions",
-    "doc_heldout_bigram_score", "frontier_priority_scores",
-    "events_hourly_profile",
-]
-
-# curated default subset: one representative per operator family
-# (relational, every dedup family, ANN, text quality, windows/streams,
-# crawl-side gates) — the families whose scale shape the verdict
-# grades, small enough that the whole phase is ~2 min
-_DEFAULT_QUERIES = [
+# one representative per operator family (relational, every dedup
+# family, ANN, text quality, windows/streams, crawl-side gates): the
+# families whose scale shape is graded, small enough that the whole
+# phase is ~2 min
+BENCH_QUERIES = [
     "tpch_q1_pricing_summary", "tpch_q3_shipping_priority",
     "top_customers_per_nation",
     "dedup_exact_md5", "dedup_minhash_signatures", "dedup_minhash_lsh_pairs",
@@ -127,48 +79,38 @@ _DEFAULT_QUERIES = [
     "frontier_dedup_antijoin",
 ]
 
-BENCH_QUERIES = _FULL_QUERIES if FULL else _DEFAULT_QUERIES
-
 # fat-wave corpus: ONE list page per section so the crawl is 2 waves
 # (wave 1 = all list pages, wave 2 = every detail page). A 10^10-URL
 # crawl admits millions of URLs per wave — the sandbox analogue is a
 # wave that carries minutes of fetch/parse work, not 5 waves of
-# per-wave scheduling barrier. FULL: 24k sections x 20 items = 480k
-# details (round 4: +50% over round 3 — longer walls keep the
-# measurement in the work-dominated regime). DEFAULT: 16k (~330k
-# pages). A 24k A/B with the items output materialized (2026-08-20,
-# clean run, barrier 0.6-1.4%) measured 0.781: the non-scaling
-# component GROWS with corpus volume on this box (Amdahl fit: ~75s
-# serial of 805s at 24k vs ~20-37s of ~450-525s at 16k), so more
-# sections do NOT amortize it — r4's 0.916 at 24k predates the items
-# materialization and is not like-for-like. The 16k regime's four
-# recorded runs with items read 0.948/0.900/0.900/0.801, and the
-# hi-only retry ladder (below) fits the budget ~4x over.
-CRAWL_SECTIONS = int(os.environ.get("BENCH_SECTIONS", "16000"))
-CRAWL_ITEMS = int(os.environ.get("BENCH_ITEMS", "20"))
-CRAWL_PAGES = int(os.environ.get("BENCH_PAGES", "1"))  # pages per section
+# per-wave scheduling barrier. 16k sections (~330k pages): a 24k A/B
+# with the items output materialized measured 0.781, because the
+# non-scaling component GROWS with corpus volume on this box (Amdahl
+# fit: ~75s serial of 805s at 24k vs ~20-37s of ~450-525s at 16k), so
+# more sections do NOT amortize it.
+CRAWL_SECTIONS = 16000
+CRAWL_ITEMS = 20
+CRAWL_PAGES = 1  # pages per section
 # per-detail-page html size (text chunks): the per-page parse/extract
 # work is the component that scales ~perfectly with slots (the enrich
 # UDF measures ≥1.0), while the per-wave orchestration jobs are
 # latency-floored at sandbox frontier sizes — fat pages put the
 # measurement in the work-dominated regime a 10^10-URL wave lives in.
-CRAWL_CHUNKS_MIN = int(os.environ.get("BENCH_CHUNKS_MIN", "96"))
-CRAWL_CHUNKS_SPAN = int(os.environ.get("BENCH_CHUNKS_SPAN", "64"))
+CRAWL_CHUNKS_MIN = 96
+CRAWL_CHUNKS_SPAN = 64
 CRAWL_WAVE_SECONDS = 400.0  # politeness budget >= hot host's wave load
-# SAME rep count per level (round-3 advice: asymmetric counts give one
-# level more shots at an uncontended window and bias the ratio).
-# 1 in-process rep: the second rep now comes from the second
-# interleaved ROUND (see main), so each level samples two separated
-# contention windows instead of one.
-CRAWL_REPS = int(os.environ.get("BENCH_CRAWL_REPS", "1"))
 # crawl-phase task granularity: partitions per task slot. Measured
 # (round 4, same-day probes at every level): 6 is ~13-16% faster than 3
 # at local[1/2/4/8] alike (finer tasks smooth GC-pause stragglers inside
 # the fused fetch job) and neutral on the N->4N ratio; 12 is within
-# noise of 6 (per-task overhead eats the gain). See BENCH.md
-# "Fetch-phase granularity study".
-PART_MULT = int(os.environ.get("BENCH_PART_MULT", "6"))
-QUERY_REPS = int(os.environ.get("BENCH_QUERY_REPS", "3" if FULL else "2"))
+# noise of 6 (per-task overhead eats the gain). See BASELINE.md
+# "Round-4 follow-up".
+PART_MULT = 6
+QUERY_REPS = 2
+# soft deadline for the whole run (seconds): the query phase gets what
+# is left minus a landing margin and skips the tail past it
+DEADLINE_S = 2700.0
+SALT_ROWS = 3_000_000
 
 
 def log(msg: str) -> None:
@@ -195,7 +137,7 @@ def _corpus_path() -> str:
             f"_c{CRAWL_CHUNKS_MIN}-{CRAWL_CHUNKS_SPAN}")
 
 
-def _bench_corpus(spark, wg, persist: bool = True):
+def _bench_corpus(spark, wg):
     """Read the bench corpus (generated once by the prep phase at full
     parallelism — a low-slot measurement subprocess must not pay the
     generation cost)."""
@@ -206,15 +148,12 @@ def _bench_corpus(spark, wg, persist: bool = True):
     # re-split: the parquet layout reflects the WRITER's parallelism;
     # without this an 8-slot run inherits the writer's file layout
     n = spark.sparkContext.defaultParallelism * 6
-    pages = spark.read.parquet(path).repartition(n)
-    if persist:
-        pages = pages.persist()
-    return sites, spec, pages
+    return sites, spec, spark.read.parquet(path).repartition(n).persist()
 
 
 def phase_prep(cores: int) -> dict:
-    """Generate + cache the corpus at FULL parallelism."""
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    """Generate + cache the corpus on every cpu."""
+    sys.path.insert(0, HERE)
     from crawler_spark.corpus import webgen as wg
     from crawler_spark.session import get_spark
 
@@ -230,14 +169,14 @@ def phase_prep(cores: int) -> dict:
 # ---------------------------------------------------------------- subphases
 
 def _crawl_session(cores: int, app: str):
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, HERE)
     from crawler_spark.session import get_spark
 
     # AQE off for the wave loop: its per-wave shuffles are small and
     # bounded; AQE's extra stage-materialization rounds only add fixed
     # per-wave scheduling latency (measured: ~40% of wave wall at
-    # sandbox scale). shuffle_partitions = 3x slots for straggler-free
-    # granularity.
+    # sandbox scale). shuffle_partitions = PART_MULT x slots for
+    # straggler-free granularity.
     return get_spark(
         app_name=app, cores=cores,
         shuffle_partitions=cores * PART_MULT,
@@ -303,42 +242,19 @@ def phase_crawl(cores: int) -> dict:
 
     spark = _crawl_session(cores, f"bench-crawl-{cores}")
     sites, pages, n_pages = _crawl_prepare(spark, cores)
-
-    # CRAWL_REPS timed reps per invocation (main() can interleave two
-    # invocations per level via BENCH_ROUNDS); keep ONLY the metric
-    # dicts between reps — holding the CrawlResult pins every rep's
-    # item DataFrames and therefore their localCheckpoint blocks
-    # (~1.5 GB of text per run), which degraded rep 2+ by 2-4x.
-    import gc
-
-    walls, metric_runs, step_runs, waves = [], [], [], 0
-    for _ in range(CRAWL_REPS):
-        t0 = time.time()
-        res = crawl(
-            spark, pages,
-            CrawlParams(wave_seconds=CRAWL_WAVE_SECONDS, n_shards=64,
-                        record_order=False, max_waves=12, n_salts=16),
-            sites=sites,
-            pages_prepartitioned=True,
-        )
-        # materialize the items OUTPUT inside the timed window (round 5):
-        # the crawl's product is the items table
-        res.items.write.format("noop").mode("overwrite").save()
-        walls.append(time.time() - t0)
-        metric_runs.append(res.metrics)
-        step_runs.append(res.step_walls)
-        waves = res.waves
-        del res  # release item/error DF refs -> checkpoint blocks free
-        gc.collect()
-        spark._jvm.System.gc()
-    assert all(
-        [m["items"] for m in r] == [m["items"] for m in metric_runs[0]]
-        for r in metric_runs[1:]
+    t0 = time.time()
+    res = crawl(
+        spark, pages,
+        CrawlParams(wave_seconds=CRAWL_WAVE_SECONDS, n_shards=64,
+                    record_order=False, max_waves=12, n_salts=16),
+        sites=sites,
+        pages_prepartitioned=True,
     )
-    mets = metric_runs[0]
-    best = min(range(len(walls)), key=lambda i: walls[i])
-    wall = walls[best]
-    steps = step_runs[best]
+    # materialize the items OUTPUT inside the timed window (round 5):
+    # the crawl's product is the items table
+    res.items.write.format("noop").mode("overwrite").save()
+    wall = time.time() - t0
+    mets, steps = res.metrics, res.step_walls
     urls = sum(m["admitted"] for m in mets)
     fetched = sum(m["fetched_ok"] for m in mets)
     items = sum(m["items"] for m in mets)
@@ -350,9 +266,12 @@ def phase_crawl(cores: int) -> dict:
     spark.stop()
     return {
         "cores": cores, "wall_sec": round(wall, 2), "n_pages": n_pages,
-        "walls": [round(w, 2) for w in walls],
+        "walls": [round(wall, 2)],
         "urls_processed": urls, "pages_fetched": fetched, "items": items,
-        "waves": waves,
+        "waves": res.waves,
+        # per-wave counts: every run at every level must agree
+        "wave_items": [m["items"] for m in mets],
+        "wave_admitted": [m["admitted"] for m in mets],
         "urls_per_sec": round(urls / wall, 2),
         "pages_per_sec": round(fetched / wall, 2),
         "step_walls": steps,
@@ -361,57 +280,12 @@ def phase_crawl(cores: int) -> dict:
     }
 
 
-def phase_crawl_store(cores: int) -> dict:
-    """Durable-state tax: ONE rep with a LakeStore attached — every wave
-    pays stage + atomic multi-table checkpoint + GC + state re-read. The
-    tax is MEASURED inside the run (CrawlResult.step_walls["store_commit"]
-    accumulates the join-state + append + stage + atomic-checkpoint + GC +
-    re-read wall per wave) — subtracting a separate no-store run drifted
-    with ambient load and once produced a negative "overhead"."""
-    import shutil
-    import tempfile
-
-    from crawler_spark.engine.driver import CrawlParams, crawl
-    from crawler_spark.state.lakestore import LakeStore
-
-    spark = _crawl_session(cores, f"bench-crawl-store-{cores}")
-    sites, pages, n_pages = _crawl_prepare(spark, cores)
-    root = tempfile.mkdtemp(prefix="bench_store_")
-    try:
-        t0 = time.time()
-        res = crawl(
-            spark, pages,
-            CrawlParams(wave_seconds=CRAWL_WAVE_SECONDS, n_shards=64,
-                        record_order=False, max_waves=12, n_salts=16),
-            sites=sites,
-            store=LakeStore(root),
-            pages_prepartitioned=True,
-        )
-        wall = time.time() - t0
-        urls = sum(m["admitted"] for m in res.metrics)
-        waves = res.waves
-        steps = res.step_walls
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    spark.stop()
-    tax = steps.get("store_commit", 0.0)
-    return {
-        "cores": cores, "wall_sec": round(wall, 2), "n_pages": n_pages,
-        "urls_processed": urls, "waves": waves,
-        "urls_per_sec": round(urls / wall, 2),
-        "step_walls": steps,
-        "overhead_sec": round(tax, 2),
-        "overhead_per_wave_sec": round(tax / max(1, waves), 2),
-        "overhead_share": round(tax / wall, 3),
-    }
-
-
 def phase_salt(cores: int) -> dict:
     """Politeness-window skew defense, measured: admission over a
     frontier whose hot host holds 80% of rows, with n_salts=1 (single
     sorted partition owns the hot host) vs n_salts=16 (two-phase salted
     rank splits it). Expect the hot host's wall to drop ~linearly."""
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, HERE)
     from pyspark.sql import functions as F
 
     from crawler_spark.operators.politeness import admit_per_host
@@ -419,9 +293,8 @@ def phase_salt(cores: int) -> dict:
 
     spark = get_spark(app_name=f"bench-salt-{cores}", cores=cores,
                       shuffle_partitions=cores * 3)
-    n_rows = int(os.environ.get("BENCH_SALT_ROWS", "3000000"))
     df = (
-        spark.range(n_rows)
+        spark.range(SALT_ROWS)
         .select(
             F.when(F.col("id") % 10 < 8, F.lit("hot.local"))
             .otherwise(F.concat(F.lit("h"), (F.col("id") % 7).cast("string"),
@@ -435,7 +308,7 @@ def phase_salt(cores: int) -> dict:
         .persist()
     )
     df.count()
-    out = {"cores": cores, "n_rows": n_rows}
+    out = {"cores": cores, "n_rows": SALT_ROWS}
     for salts in (1, 16):
         # warm + 2 timed
         admit_per_host(df, "budget", n_salts=salts).write.format("noop").mode("overwrite").save()
@@ -456,7 +329,7 @@ def phase_parse(cores: int) -> dict:
     page in one batch job (the work one giant wave would do, minus the
     per-wave barrier latency). This is the scaling-efficiency surface:
     embarrassingly parallel Arrow-UDF + codegen work."""
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, HERE)
     from pyspark.sql import functions as F
 
     from crawler_spark.canonical import canonicalize_url_col
@@ -504,7 +377,7 @@ def phase_parse(cores: int) -> dict:
 
 
 def phase_queries(cores: int) -> dict:
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, HERE)
     import __spark_entry__ as entry
     from crawler_spark.session import get_spark
 
@@ -563,9 +436,11 @@ def _run_sub(phase: str, cores: int, extra_env: dict | None = None) -> dict:
         cmd,
         env=env, capture_output=True, text=True, timeout=3000,
     )
-    sys.stderr.write(proc.stderr[-4000:])
+    # the child's own log lines only: Spark's console progress bar fills
+    # any fixed-size tail of its stderr
+    sys.stderr.writelines(ln for ln in proc.stderr.splitlines(True) if ln.startswith("[bench]"))
     if proc.returncode != 0:
-        raise RuntimeError(f"phase {phase}@{cores} failed: {proc.stdout[-2000:]}")
+        raise RuntimeError(f"phase {phase}@{cores} failed: {proc.stderr[-2000:]}")
     return json.loads(proc.stdout.strip().splitlines()[-1])
 
 
@@ -573,234 +448,153 @@ def main() -> None:
     phase = os.environ.get("BENCH_PHASE")
     if phase:
         fn = {
-            "crawl": phase_crawl, "crawl_store": phase_crawl_store,
-            "queries": phase_queries, "parse": phase_parse,
+            "crawl": phase_crawl, "queries": phase_queries, "parse": phase_parse,
             "prep": phase_prep, "salt": phase_salt,
         }[phase]
         print(json.dumps(fn(int(os.environ["BENCH_CORES"]))))
         return
 
-    # Global soft deadline (round-5): BENCH_r04.json recorded rc=124
-    # because the run outlived the driver's wall budget — a timed-out
-    # bench grades as NOTHING. Every optional expenditure below (the
-    # adaptive retry, the per-query table) checks the remaining budget
-    # first, so the ONE JSON line always lands even on a contended box.
-    deadline_s = float(os.environ.get("BENCH_DEADLINE_S", "2700"))
     t_main = time.time()
-
-    def _left() -> float:
-        return deadline_s - (time.time() - t_main)
-
     prep = _run_sub("prep", CPUS)
     log(f"corpus ready: {prep}")
-    # FULL: 2 rounds x 1 in-process rep (same total reps as 1 round x 2,
-    # but the two reps of a level land in two SEPARATED time windows
-    # with the other level between them — a multi-minute contention
-    # burst can no longer hit both of one level's reps and neither of
-    # the other's, which is how an identical earlier run drifted from
-    # 0.874 to 0.788 on the graded pair). DEFAULT: 1 round; the
-    # adaptive below-criterion retry still adds a round when needed.
-    rounds = int(os.environ.get("BENCH_ROUNDS", "2" if FULL else "1"))
 
-    def _best(a: dict, b: dict) -> dict:
-        # merge two invocations of the same level: keep the better wall,
-        # report all walls. Ambient contention on this shared host comes
-        # in multi-minute bursts (observed: identical-work walls ranging
-        # 58-116s), so levels can be INTERLEAVED across `rounds` windows
-        # and each level's best is the min over all of them — the
-        # least-contended run is the measurement.
-        out = dict(a if a["wall_sec"] <= b["wall_sec"] else b)
-        out["walls"] = a["walls"] + b["walls"]
+    def _interleaved(phase: str) -> dict[int, list[dict]]:
+        runs: dict[int, list[dict]] = {LO: [], HI: []}
+        for _ in range(ROUNDS):
+            for cores in (LO, HI):
+                runs[cores].append(_run_sub(phase, cores))
+        return runs
+
+    def _best(runs: list[dict]) -> dict:
+        # merge the runs of one level: keep the best wall, report all
+        # walls. Ambient contention on this shared host comes in
+        # multi-minute bursts (observed: identical-work walls ranging
+        # 58-116s), so the least-contended run is the measurement.
+        out = dict(min(runs, key=lambda r: r["wall_sec"]))
+        out["walls"] = [w for r in runs for w in r["walls"]]
         return out
 
-    def _interleaved(phase: str, lo_c: int, hi_c: int) -> tuple[dict, dict]:
-        lo = _run_sub(phase, lo_c)
-        hi = _run_sub(phase, hi_c)
-        for _ in range(rounds - 1):
-            lo = _best(lo, _run_sub(phase, lo_c))
-            hi = _best(hi, _run_sub(phase, hi_c))
-        return lo, hi
+    log(f"crawl scaling run: local[{LO}] vs local[{HI}]")
+    crawl_runs = _interleaved("crawl")
+    lo, hi = _best(crawl_runs[LO]), _best(crawl_runs[HI])
+    eff = (hi["urls_per_sec"] / lo["urls_per_sec"]) / (HI / LO)
+    # partition independence: the same crawl at any local[N] admits and
+    # extracts the same rows in every wave
+    wave_counts = [[r["wave_items"], r["wave_admitted"]]
+                   for cores in (LO, HI) for r in crawl_runs[cores]]
+    consistent = all(c == wave_counts[0] for c in wave_counts)
+    log(f"low: {lo}")
+    log(f"high: {hi}")
+    log(f"crawl wave-loop scaling efficiency ({LO}->{HI} slots): {eff:.3f}; "
+        f"per-wave counts consistent across runs: {consistent}")
+    crawl_res = {
+        f"local{LO}": lo, f"local{HI}": hi,
+        "scaling_efficiency": round(eff, 3),
+        "criterion": "throughput(local[4N])/throughput(local[N])/4 >= 0.8",
+        "consistent": consistent,
+        "wave_counts": wave_counts,
+    }
 
-    crawl_pairs: dict[str, dict] = {}
-    parse_pairs: dict[str, dict] = {}
-    for lo_c, hi_c in PAIRS:
-        log(f"crawl scaling run: local[{lo_c}] vs local[{hi_c}]")
-        lo, hi = _interleaved("crawl", lo_c, hi_c)
-        eff = (hi["urls_per_sec"] / lo["urls_per_sec"]) / (hi_c / lo_c)
-        retry_skipped = False
-        for _retry in range(2):
-            if eff >= 0.8:
-                break
-            # adaptive retry, HI LEVEL ONLY: a multi-minute ambient-
-            # contention burst on this shared host can inflate one
-            # level's every wall in a round (observed: an identical-work
-            # pair drifting 0.874 → 0.788). Under the min-of-walls
-            # estimator a fresh LO rep can only LOWER the lo wall (it is
-            # already the min), which lowers the ratio — so a cleaner hi
-            # rep is the only spend that can recover a burst-compressed
-            # measurement, and it costs ~1/4 of a full pair round. All
-            # walls are recorded either way.
-            retry_est = hi["wall_sec"] + 120  # + warmup
-            if _left() > retry_est + 300:  # keep room for parse+queries
-                log(f"pair {lo_c}-{hi_c} below criterion ({eff:.3f}) — "
-                    f"hi-level retry {_retry + 1}")
-                hi = _best(hi, _run_sub("crawl", hi_c))
-                eff = (hi["urls_per_sec"] / lo["urls_per_sec"]) / (hi_c / lo_c)
-            else:
-                retry_skipped = True
-                log(f"pair {lo_c}-{hi_c} below criterion ({eff:.3f}) but only "
-                    f"{_left():.0f}s of budget left (< {retry_est + 300:.0f}) — "
-                    "skipping retry to guarantee the artifact lands")
-                break
-        log(f"low: {lo}")
-        log(f"high: {hi}")
-        log(f"crawl wave-loop scaling efficiency ({lo_c}->{hi_c} slots): {eff:.3f}")
-        crawl_pairs[f"{lo_c}-{hi_c}"] = {
-            f"local{lo_c}": lo, f"local{hi_c}": hi,
-            "scaling_efficiency": round(eff, 3),
-        }
-        if retry_skipped:
-            crawl_pairs[f"{lo_c}-{hi_c}"]["retry_skipped_deadline"] = True
-
-        log(f"data-plane parse scaling run: local[{lo_c}] vs local[{hi_c}]")
-        try:
-            plo, phi = _interleaved("parse", lo_c, hi_c)
-        except Exception as exc:  # noqa: BLE001 — keep the crawl criterion
-            log(f"parse phase failed ({exc}) — recording error, continuing")
-            parse_pairs[f"{lo_c}-{hi_c}"] = {
-                "scaling_efficiency": 0.0, "error": str(exc)[:500],
-            }
-            continue
-        peff = (phi["pages_per_sec"] / plo["pages_per_sec"]) / (hi_c / lo_c)
-        parse_retry_skipped = False
-        for _retry in range(2):
-            if peff >= 0.8:
-                break
-            # same hi-only adaptive retry as the crawl pair: one
-            # validation run of this exact scenario measured 0.411 from
-            # an ambient burst hitting both hi-level reps (walls
-            # 32.6/36.8s) while an idle-box rerun minutes later read
-            # 14.2s — a cleaner hi rep recovers the real number, and
-            # under min-of-walls a fresh lo rep could only lower the
-            # ratio. Parse hi runs are cheap (~30-60s), still
-            # budget-gated.
-            retry_est = phi["wall_sec"] + 60
-            if _left() > retry_est + 240:  # keep room for queries
-                log(f"parse pair {lo_c}-{hi_c} below criterion ({peff:.3f}) "
-                    f"— hi-level retry {_retry + 1}")
-                phi = _best(phi, _run_sub("parse", hi_c))
-                peff = (phi["pages_per_sec"] / plo["pages_per_sec"]) / (hi_c / lo_c)
-            else:
-                parse_retry_skipped = True
-                log(f"parse pair {lo_c}-{hi_c} below criterion ({peff:.3f}) "
-                    f"but only {_left():.0f}s of budget left — skipping retry")
-                break
+    log(f"data-plane parse scaling run: local[{LO}] vs local[{HI}]")
+    try:
+        parse_runs = _interleaved("parse")
+    except Exception as exc:  # noqa: BLE001 — keep the crawl criterion
+        log(f"parse phase failed ({exc}) — recording error, continuing")
+        data_plane = {"scaling_efficiency": 0.0, "error": str(exc)[:500]}
+    else:
+        plo, phi = _best(parse_runs[LO]), _best(parse_runs[HI])
+        peff = (phi["pages_per_sec"] / plo["pages_per_sec"]) / (HI / LO)
         log(f"parse low: {plo}")
         log(f"parse high: {phi}")
-        log(f"data-plane scaling efficiency ({lo_c}->{hi_c} slots): {peff:.3f}")
-        parse_pairs[f"{lo_c}-{hi_c}"] = {
-            f"local{lo_c}": plo, f"local{hi_c}": phi,
-            "scaling_efficiency": round(peff, 3),
-        }
-        if parse_retry_skipped:
-            parse_pairs[f"{lo_c}-{hi_c}"]["retry_skipped_deadline"] = True
+        log(f"data-plane scaling efficiency ({LO}->{HI} slots): {peff:.3f}")
+        data_plane = {f"local{LO}": plo, f"local{HI}": phi,
+                      "scaling_efficiency": round(peff, 3)}
 
-    # headline pair: the HIGHEST-baseline pair that meets the criterion
-    # (strongest form); fall back to the best pair otherwise — all pairs
-    # are recorded either way.
-    def _pick(pairs: dict[str, dict]) -> str:
-        passing = [k for k, v in pairs.items() if v["scaling_efficiency"] >= 0.8]
-        if passing:
-            return max(passing, key=lambda k: int(k.split("-")[0]))
-        return max(pairs, key=lambda k: pairs[k]["scaling_efficiency"])
-
-    ckey = _pick(crawl_pairs)
-    pkey = _pick(parse_pairs)
-    lo_c, hi_c = (int(x) for x in ckey.split("-"))
-    lo, hi = crawl_pairs[ckey][f"local{lo_c}"], crawl_pairs[ckey][f"local{hi_c}"]
-
-    # durable-state tax at the headline pair's high level; the overhead
-    # fields come from the run's OWN step_walls["store_commit"]
-    # accumulator (wall-subtraction against a separate no-store run
-    # drifted with ambient load and once went negative). FULL only —
-    # these two phases are characterization, not the graded criterion,
-    # and they cost ~5 min the budgeted profile cannot afford.
-    if FULL:
-        store = _run_sub("crawl_store", hi_c)
-        log(f"durable-state tax: {store}")
-        salt = _run_sub("salt", 8)
-    else:
-        store = {"skipped": "BENCH_FULL=0 — round-4 measured values in "
-                            "BASELINE.md 'Measured results (round 4)'"}
-        salt = {"skipped": "BENCH_FULL=0 — round-4 measured speedup 2.33x, "
-                           "see BASELINE.md"}
+    salt = _run_sub("salt", 8)
     # per-query table: spend whatever budget is left, minus a landing
     # margin; phase_queries skips (and reports) the tail past its
     # deadline rather than running the whole artifact over the wall
+    left = DEADLINE_S - (time.time() - t_main)
     try:
-        qres = _run_sub(
-            "queries", CPUS,
-            extra_env={"BENCH_QUERY_DEADLINE_S": max(120.0, _left() - 90.0)},
-        )
+        qres = _run_sub("queries", CPUS,
+                        extra_env={"BENCH_QUERY_DEADLINE_S": max(120.0, left - 90.0)})
         queries, queries_skipped = qres["timings"], qres["skipped"]
     except Exception as exc:  # noqa: BLE001 — keep the crawl criterion
         log(f"queries phase failed ({exc}) — recording error, continuing")
         queries, queries_skipped = {}, list(BENCH_QUERIES)
 
     result = {
-        "metric": f"crawl_wall_sec_local{CPUS}",
+        "metric": f"crawl_wall_sec_local{HI}",
         "value": hi["wall_sec"],
         "unit": "sec",
-        "queries": queries,
         "sf": SF_DIR,
-        "crawl": {
-            f"local{lo_c}": lo,
-            f"local{hi_c}": hi,
-            "scaling_efficiency": crawl_pairs[ckey]["scaling_efficiency"],
-            "criterion": "throughput(local[4N])/throughput(local[N])/4 >= 0.8",
-            "pairs": {k: v["scaling_efficiency"] for k, v in crawl_pairs.items()},
-            "all_pairs": crawl_pairs,
-        },
-        "data_plane": {
-            **{
-                k: v for k, v in parse_pairs[pkey].items()
-                if k.startswith("local") or k in ("error", "retry_skipped_deadline")
-            },
-            "scaling_efficiency": parse_pairs[pkey]["scaling_efficiency"],
-            "pairs": {k: v["scaling_efficiency"] for k, v in parse_pairs.items()},
-        },
-        "durable_state": store,
+        "queries": queries,
+        "queries_skipped": queries_skipped,
+        "crawl": crawl_res,
+        "data_plane": data_plane,
         "politeness_salt": salt,
+        "bench_wall_sec": round(time.time() - t_main, 1),
     }
-    if queries_skipped:
-        result["queries_skipped"] = queries_skipped
-    result["bench_wall_sec"] = round(time.time() - t_main, 1)
-    _write_bench_md(result, crawl_pairs, parse_pairs)
-    print(json.dumps(result))
+    _write_bench_md(result)
+    with open(os.path.join(HERE, DETAIL_FILE), "w") as f:
+        json.dump(result, f, indent=1)
+    print(_headline(result))
+    if not consistent:
+        log(f"per-wave [items, admitted] differ across crawl runs: {wave_counts}")
+        sys.exit(1)
 
 
-def _write_bench_md(r: dict, crawl_pairs: dict, parse_pairs: dict) -> None:
+def _headline(r: dict) -> str:
+    """One compact JSON line (< 1,500 chars) for a log tail; the full
+    result is in DETAIL_FILE."""
+    lo, hi = f"local{LO}", f"local{HI}"
+    c, d = r["crawl"], r["data_plane"]
+    return json.dumps({
+        "metric": r["metric"], "value": r["value"], "unit": r["unit"], "sf": r["sf"],
+        "crawl_wall_sec": {lo: c[lo]["wall_sec"], hi: c[hi]["wall_sec"]},
+        "crawl_scaling_efficiency": c["scaling_efficiency"],
+        "crawl_consistent": c["consistent"],
+        "data_plane_pages_per_sec": {
+            lvl: d[lvl]["pages_per_sec"] for lvl in (lo, hi) if lvl in d
+        },
+        "data_plane_scaling_efficiency": d["scaling_efficiency"],
+        f"step_walls_{hi}": c[hi]["step_walls"],
+        "salt_speedup": r["politeness_salt"].get("speedup"),
+        "queries": {
+            "n": len(r["queries"]),
+            "total_sec": round(sum(r["queries"].values()), 2),
+            "skipped": len(r["queries_skipped"]),
+        },
+        "bench_wall_sec": r["bench_wall_sec"],
+        "detail": DETAIL_FILE,
+    })
+
+
+def _write_bench_md(r: dict) -> None:
+    pair = f"{LO}-{HI}"
+    crawl, data_plane = r["crawl"], r["data_plane"]
+    levels = (f"local{LO}", f"local{HI}")
     lines = [
         "# BENCH — measured results (latest run)",
         "",
-        "## Crawl wave-loop throughput (same input, two parallelism levels, BOTH pairs)",
+        "## Crawl wave-loop throughput (same input, two parallelism levels)",
         "",
         "| pair | level | wall (s) | URLs/sec | pages/sec | waves | barrier (s) | barrier share |",
         "|---|---|---|---|---|---|---|---|",
     ]
-    for key, pv in crawl_pairs.items():
-        for lvl, d in pv.items():
-            if not lvl.startswith("local"):
-                continue
-            lines.append(
-                f"| {key} | {lvl} | {d['wall_sec']} | {d['urls_per_sec']} | "
-                f"{d['pages_per_sec']} | {d['waves']} | {d.get('barrier_sec', '—')} | "
-                f"{d.get('barrier_share', '—')} |"
-            )
+    for lvl in levels:
+        d = crawl[lvl]
+        lines.append(
+            f"| {pair} | {lvl} | {d['wall_sec']} | {d['urls_per_sec']} | "
+            f"{d['pages_per_sec']} | {d['waves']} | {d['barrier_sec']} | "
+            f"{d['barrier_share']} |"
+        )
     lines += [
         "",
-        "Scaling efficiency per pair (criterion ≥ 0.8, BASELINE.json): "
-        + ", ".join(f"**{k}: {v['scaling_efficiency']}**" for k, v in crawl_pairs.items()),
+        f"Scaling efficiency (criterion ≥ 0.8, BASELINE.json): "
+        f"**{pair}: {crawl['scaling_efficiency']}**. Per-wave items/admitted "
+        f"counts identical across all {2 * ROUNDS} crawl runs: "
+        f"**{crawl['consistent']}**.",
         "",
         "Barrier = measured per-step wall NOT in the scalable phases "
         "(admit+fetch+enrich checkpoint, outputs phase) — the fixed "
@@ -814,15 +608,14 @@ def _write_bench_md(r: dict, crawl_pairs: dict, parse_pairs: dict) -> None:
         "| pair | level | wall (s) | pages/sec |",
         "|---|---|---|---|",
     ]
-    for key, pv in parse_pairs.items():
-        for lvl, d in pv.items():
-            if not lvl.startswith("local"):
-                continue
-            lines.append(f"| {key} | {lvl} | {d['wall_sec']} | {d['pages_per_sec']} |")
+    lines += [
+        f"| {pair} | {lvl} | {data_plane[lvl]['wall_sec']} | {data_plane[lvl]['pages_per_sec']} |"
+        for lvl in levels if lvl in data_plane
+    ]
     lines += [
         "",
-        "Data-plane scaling efficiency per pair: "
-        + ", ".join(f"**{k}: {v['scaling_efficiency']}**" for k, v in parse_pairs.items()),
+        f"Data-plane scaling efficiency: **{pair}: {data_plane['scaling_efficiency']}**"
+        + (f" (error: {data_plane['error']})" if "error" in data_plane else ""),
         "",
         "Readings above 1.0 are measurement artifact, not real "
         "superlinearity: the 1-slot baseline bears the whole GC/JIT load "
@@ -831,15 +624,13 @@ def _write_bench_md(r: dict, crawl_pairs: dict, parse_pairs: dict) -> None:
         "eliminate that bias. Read any value ≥ the 0.8 criterion as "
         "\"scales\", not as a literal speedup factor.",
         "",
-        "## Durable-state tax (LakeStore attached, same corpus)",
+        "## Durable-state tax (LakeStore attached)",
         "",
-        f"```json\n{json.dumps(r['durable_state'], indent=2)}\n```",
-        "",
-        "Every wave pays join-state + append + stage + atomic multi-table "
-        "checkpoint + GC + durable state re-read; overhead_sec is the "
-        "run's own step_walls['store_commit'] accumulator (measured "
-        "in-run), quantifying the per-wave durability cost the "
-        "store=None scaling runs exclude.",
+        "Not measured by bench.py. `python3 perfbench/run.py --workload "
+        "durable_resume --seed 1 --trace 1` reports the per-wave commit "
+        "(join-state + append + stage + atomic multi-table checkpoint + GC "
+        "+ durable state re-read) as `driver.step.store_commit_s`, next to "
+        "the run's `run_s`.",
         "",
         "## Politeness salt skew defense (80%-one-host frontier)",
         "",
@@ -856,10 +647,10 @@ def _write_bench_md(r: dict, crawl_pairs: dict, parse_pairs: dict) -> None:
         "|---|---|",
     ]
     lines += [f"| {k} | {v} |" for k, v in r["queries"].items()]
-    if r.get("queries_skipped"):
+    if r["queries_skipped"]:
         lines += ["", f"Skipped past the bench deadline: "
                       f"{', '.join(r['queries_skipped'])}"]
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH.md"), "w") as f:
+    with open(os.path.join(HERE, "BENCH.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
 
 
